@@ -3,32 +3,34 @@ checkpoint/resume, per-stage lineage metrics, and a point-in-time leakage
 validator.
 
 North_rule requirements covered here:
-- resume-from-checkpoint: each step can snapshot to parquet; a re-run skips
-  steps whose snapshot committed (_SUCCESS marker). The reference's primitive
-  form of this is per-id CSVs + slurm job_num sharding
+- resume-from-checkpoint: with ``checkpoint_dir`` each step commits its
+  output as a snapshot table (sources/snapshots); a re-run resumes every
+  step from its last committed snapshot, and a step that crashed before its
+  commit marker recomputes. The reference's primitive form of this is
+  per-id CSVs + slurm job_num sharding
   (microsoft_asr_features/extract_timing_features.py:179-190).
-- per-partition lineage + metrics: row counts via df.observe (no extra job),
-  output bytes + file count from the snapshot directory, wall seconds —
-  written as JSON next to each snapshot.
+- per-partition lineage + metrics: the snapshot manifest records rows
+  (df.observe, no extra job), bytes, wall seconds and every output file
+  with its bytes; StepMetrics carries the per-step totals.
 - leakage validation: property-style checker that mutates future rows and
   asserts point-in-time outputs for the past are unchanged.
 """
 
 from __future__ import annotations
 
-import json
 import posixpath
 import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_extraction_spark.fsutil import (
-    fs_exists as _fs_exists,
-    fs_list_parquet as _fs_list_parquet,
-    fs_write_text as _fs_write_text,
+from feature_extraction_spark.sources.snapshots import (
+    commit_snapshot,
+    last_committed_version,
+    read_manifest,
+    read_snapshot,
 )
 
 
@@ -36,8 +38,6 @@ from feature_extraction_spark.fsutil import (
 class FeatureStep:
     name: str
     fn: Callable[[DataFrame], DataFrame]
-    # steps that only add columns / filter can skip snapshotting
-    checkpoint: bool = True
 
 
 @dataclass
@@ -54,118 +54,36 @@ class StepMetrics:
 class FeaturePipeline:
     steps: list[FeatureStep]
     metrics: list[StepMetrics] = field(default_factory=list)
-    # True: checkpoints are versioned snapshot tables (sources/snapshots —
-    # manifest-driven commits, resume from the LAST COMMITTED snapshot; a
-    # crashed step's partial write is invisible). False: plain parquet dirs
-    # with the Spark committer's _SUCCESS marker as the commit point.
-    use_snapshots: bool = False
 
-    def run(
-        self,
-        df: DataFrame,
-        checkpoint_dir: str | None = None,
-        resume: bool = True,
-    ) -> DataFrame:
-        """Apply steps in order. With ``checkpoint_dir``, each checkpointing
-        step writes a parquet snapshot and subsequent runs resume from the
-        last committed snapshot instead of recomputing."""
+    def run(self, df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+        """Apply steps in order. With ``checkpoint_dir``, each step commits
+        its output as a snapshot under ``checkpoint_dir/<step name>`` and
+        later runs resume from the last committed snapshot instead of
+        recomputing."""
         self.metrics = []
         spark = df.sparkSession
         for step in self.steps:
             t0 = time.monotonic()
-            if checkpoint_dir and step.checkpoint and self.use_snapshots:
-                from feature_extraction_spark.sources.snapshots import (
-                    commit_snapshot,
-                    last_committed_version,
-                    read_manifest,
-                    read_snapshot,
-                )
-
-                path = posixpath.join(checkpoint_dir, step.name)
-                v = last_committed_version(spark, path) if resume else None
-                if v is not None:
-                    df = read_snapshot(spark, path, v)
-                    m = read_manifest(spark, path, v)
-                    self.metrics.append(
-                        StepMetrics(
-                            step.name, int(m["rows"]), int(m["bytes"]),
-                            len(m["files"]), time.monotonic() - t0, True,
-                        )
-                    )
-                    continue
-                info = commit_snapshot(step.fn(df), path, mode="overwrite")
-                self.metrics.append(
-                    StepMetrics(
-                        step.name, info.rows, info.bytes, len(info.files),
-                        time.monotonic() - t0, False,
-                    )
-                )
-                df = read_snapshot(spark, path, info.version)
-            elif checkpoint_dir and step.checkpoint:
-                path = posixpath.join(checkpoint_dir, step.name)
-                success = posixpath.join(path, "_SUCCESS")
-                if resume and _fs_exists(spark, success):
-                    df = spark.read.parquet(path)
-                    self._record(
-                        spark, step.name, path, -1, time.monotonic() - t0, True
-                    )
-                    continue
-                obs = Observation(f"rows_{step.name}")
-                out = step.fn(df)
-                out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-                out.write.mode("overwrite").parquet(path)
-                rows = int(obs.get["rows"])
-                self._record(
-                    spark, step.name, path, rows, time.monotonic() - t0, False
-                )
-                self._write_lineage(spark, path, step.name)
-                df = spark.read.parquet(path)
-            else:
+            if not checkpoint_dir:
                 df = step.fn(df)
                 self.metrics.append(
                     StepMetrics(step.name, -1, -1, -1, time.monotonic() - t0, False)
                 )
-        return df
-
-    def _record(
-        self,
-        spark,
-        name: str,
-        path: str,
-        rows: int,
-        wall: float,
-        resumed: bool,
-    ):
-        parts = _fs_list_parquet(spark, path)
-        self.metrics.append(
-            StepMetrics(
-                name, rows, sum(b for _, b in parts), len(parts), wall, resumed
+                continue
+            path = posixpath.join(checkpoint_dir, step.name)
+            v = last_committed_version(spark, path)
+            resumed = v is not None
+            if not resumed:
+                v = commit_snapshot(step.fn(df), path).version
+            df = read_snapshot(spark, path, v)
+            m = read_manifest(spark, path, v)
+            self.metrics.append(
+                StepMetrics(
+                    step.name, int(m["rows"]), int(m["bytes"]), len(m["files"]),
+                    time.monotonic() - t0, resumed,
+                )
             )
-        )
-
-    def _write_lineage(self, spark, path: str, name: str):
-        m = next(x for x in reversed(self.metrics) if x.step == name)
-        # per-partition breakdown: one output file per write partition, so
-        # the file list IS the partition-level lineage (north_rule:
-        # "checkpoints per-partition lineage + row-count/bytes metrics")
-        partitions = [
-            {"file": f, "bytes": b} for f, b in _fs_list_parquet(spark, path)
-        ]
-        _fs_write_text(
-            spark,
-            posixpath.join(path, "_lineage.json"),
-            json.dumps(
-                {
-                    "step": m.step,
-                    "rows": m.rows,
-                    "bytes": m.bytes,
-                    "files": m.files,
-                    "wall_s": round(m.wall_s, 3),
-                    "resumed": m.resumed,
-                    "partitions": partitions,
-                }
-            ),
-        )
+        return df
 
 
 def validate_no_leakage(
@@ -199,23 +117,3 @@ def validate_no_leakage(
     pd.testing.assert_frame_equal(a, b)
     return True
 
-
-def salted_repartition(
-    df: DataFrame,
-    key: str = "conv_id",
-    salt_buckets: int = 8,
-    threshold_rows: int = 100_000,
-) -> DataFrame:
-    """Skew mitigation for whole-group kernels (Window/groupBy get no AQE
-    skew splitting): add a salt derived from turn_idx for conversations whose
-    turn count exceeds the threshold, so one hot conversation spreads over
-    ``salt_buckets`` tasks. Callers must merge per-(key, salt) partials."""
-    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
-    df = df.join(F.broadcast(counts.filter(F.col("_n") > threshold_rows)), key, "left")
-    return df.withColumn(
-        "_salt",
-        F.when(
-            F.col("_n").isNotNull(),
-            F.pmod(F.col("turn_idx"), F.lit(salt_buckets)),
-        ).otherwise(F.lit(0)),
-    ).drop("_n")

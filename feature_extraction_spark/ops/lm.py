@@ -363,8 +363,12 @@ def train_phrases(
     (Mikolov et al. 2013 eq. 6; the reference's phrase models are built
     exactly this way — text_util.py:50-71, gensim.models.Phrases):
     score(a, b) = (c_ab - min_count) * V / (c_a * c_b) over UNIGRAM
-    counts c_a/c_b and vocabulary size V (distinct tokens); a bigram is
-    a phrase when score > threshold. NOT iterative — one counting pass
+    counts c_a/c_b and vocabulary size V; a bigram is a phrase when
+    score > threshold. Parity caveat: V here counts distinct UNIGRAMS
+    only, while gensim's ``len(vocab)`` counts unigrams plus bigrams, so
+    scores sit on a different (smaller) scale and gensim thresholds —
+    e.g. the reference's ``threshold=100`` — do not transfer; choose the
+    threshold on this scale. NOT iterative — one counting pass
     plus a threshold rule, so the whole trainer is SQL-expressible and
     value-oracled in the driver (phrase_merge_docs).
 

@@ -1,20 +1,20 @@
 """Engine runner (checkpoint/resume, lineage metrics), leakage validator,
 streaming session windows vs batch parity, multimodal plumbing."""
 
-import json
-import os
-
 import pyspark.sql.functions as F
 import pytest
 
 from feature_extraction_spark.engine import (
     FeaturePipeline,
     FeatureStep,
-    salted_repartition,
     validate_no_leakage,
 )
 from feature_extraction_spark.ops.sessionize import sessionize
 from feature_extraction_spark.ops.windows import rolling_turn_features
+from feature_extraction_spark.sources.snapshots import (
+    last_committed_version,
+    read_manifest,
+)
 
 
 def test_pipeline_checkpoint_resume(spark, transcripts, tmp_path):
@@ -34,9 +34,10 @@ def test_pipeline_checkpoint_resume(spark, transcripts, tmp_path):
     out1 = pipe.run(transcripts, checkpoint_dir=ckpt).toPandas()
     m1 = {m.step: m for m in pipe.metrics}
     assert not m1["sess"].resumed and m1["sess"].rows > 0 and m1["sess"].bytes > 0
-    # lineage json written
-    lineage = json.load(open(os.path.join(ckpt, "sess", "_lineage.json")))
-    assert lineage["rows"] == m1["sess"].rows
+    # lineage recorded in the step's snapshot manifest
+    sess = ckpt + "/sess"
+    manifest = read_manifest(spark, sess, last_committed_version(spark, sess))
+    assert manifest["rows"] == m1["sess"].rows
 
     # second run resumes: step1 fn must NOT be called again
     out2 = pipe.run(transcripts, checkpoint_dir=ckpt).toPandas()
@@ -71,17 +72,6 @@ def test_leakage_validator_catches_leaky_pipeline(transcripts):
 
     with pytest.raises(AssertionError):
         validate_no_leakage(leaky, transcripts)
-
-
-def test_salted_repartition(spark, transcripts):
-    out = salted_repartition(transcripts, salt_buckets=4, threshold_rows=50)
-    assert "_salt" in out.columns
-    pdf = out.toPandas()
-    big = pdf.groupby("conv_id")["_salt"].nunique()
-    sizes = pdf.groupby("conv_id").size()
-    # hot conversations get >1 salt bucket; small ones stay at one
-    assert (big[sizes > 50] > 1).all()
-    assert (big[sizes <= 50] == 1).all()
 
 
 def test_stream_session_bounds_matches_batch(spark, transcripts, tmp_path):
@@ -231,11 +221,12 @@ def test_pipeline_checkpoint_uri_scheme(spark, transcripts, tmp_path):
     out1 = pipe.run(transcripts, checkpoint_dir=ckpt).count()
     m1 = {m.step: m for m in pipe.metrics}
     assert m1["sess"].rows > 0 and m1["sess"].bytes > 0 and m1["sess"].files > 0
-    # lineage written through the FS API at the URI location
-    lineage = json.load(open(os.path.join(str(tmp_path / "uri_ckpt"), "sess", "_lineage.json")))
-    assert lineage["rows"] == m1["sess"].rows
-    assert len(lineage["partitions"]) == m1["sess"].files
-    assert all(p["bytes"] > 0 for p in lineage["partitions"])
+    # lineage read back through the FS API at the URI location
+    sess = ckpt + "/sess"
+    manifest = read_manifest(spark, sess, last_committed_version(spark, sess))
+    assert manifest["rows"] == m1["sess"].rows
+    assert len(manifest["files"]) == m1["sess"].files
+    assert all(f["bytes"] > 0 for f in manifest["files"])
 
     out2 = pipe.run(transcripts, checkpoint_dir=ckpt).count()
     m2 = {m.step: m for m in pipe.metrics}

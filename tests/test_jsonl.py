@@ -1,6 +1,7 @@
 """JSONL source: schema-on-read parsing, corrupt capture, quarantine
 (sources/jsonl.py)."""
 
+import datetime
 import json
 import os
 
@@ -56,10 +57,13 @@ def test_quarantine_splits_and_drops_column(spark, tmp_path):
 
 
 def test_parse_jsonl_column_roundtrip(spark):
+    wrong_type = ('{"conv_id": "c", "turn_idx": "x3", "role": "user", '
+                  '"text": "hi", "tool": null, "ts": "2026-01-01T00:00:01Z"}')
     df = spark.createDataFrame(
         [(1, '{"conv_id": "c", "turn_idx": 3, "role": "assistant", '
              '"text": "ok", "tool": null, "ts": "2026-01-01T00:00:00Z"}'),
-         (2, "garbage{")],
+         (2, "garbage{"),
+         (3, wrong_type)],
         "src_id int, json string",
     )
     out = parse_jsonl(df)
@@ -67,6 +71,14 @@ def test_parse_jsonl_column_roundtrip(spark):
     assert rows[1]["conv_id"] == "c" and rows[1]["_corrupt"] is None
     assert rows[1]["role"] == "assistant"
     assert rows[2]["conv_id"] is None and rows[2]["_corrupt"] == "garbage{"
+    # valid JSON, wrong type: PERMISSIVE from_json keeps the partial result —
+    # only the mistyped field is NULL, the rest is recovered, and the raw
+    # line still lands in _corrupt
+    r3 = rows[3]
+    assert r3["turn_idx"] is None
+    assert (r3["conv_id"], r3["role"], r3["text"]) == ("c", "user", "hi")
+    assert r3["ts"] - rows[1]["ts"] == datetime.timedelta(seconds=1)
+    assert r3["_corrupt"] == wrong_type
 
 
 def test_read_jsonl_no_inference_prepass(spark, tmp_path):

@@ -72,13 +72,14 @@ def test_skew_flagship_checkpoint_balance(spark, tmp_path):
     thousands of small ones through the FLAGSHIP pipeline under the
     checkpointing engine — asserts completion, per-key correctness of the
     row count, and post-rebalance per-partition balance read back from the
-    checkpoint lineage metrics (the skew escape hatch a 100 TB run needs:
+    checkpoint's snapshot manifest (the skew escape hatch a 100 TB run needs:
     window stages are inherently keyed, the sink rebalances)."""
-    import json
-    import os
-
     from bench import flagship_pipeline
     from feature_extraction_spark.engine import FeaturePipeline, FeatureStep
+    from feature_extraction_spark.sources.snapshots import (
+        last_committed_version,
+        read_manifest,
+    )
 
     small = synth_transcripts(spark, n_convs=3000, seed=7, max_turns=20)
     n_hot = 100_000
@@ -103,10 +104,9 @@ def test_skew_flagship_checkpoint_balance(spark, tmp_path):
     assert out.count() == n_total
     assert out.filter(F.col("conv_id") == "conv_hot").count() == n_hot
 
-    lineage = json.load(
-        open(os.path.join(str(tmp_path / "skew_ck"), "rebalance", "_lineage.json"))
-    )
-    parts = [p["bytes"] for p in lineage["partitions"]]
+    table = str(tmp_path / "skew_ck" / "rebalance")
+    manifest = read_manifest(spark, table, last_committed_version(spark, table))
+    parts = [f["bytes"] for f in manifest["files"]]
     assert len(parts) >= 8
     mean_b = sum(parts) / len(parts)
     # round-robin rebalance must spread the hot conversation's output:

@@ -79,9 +79,7 @@ def test_pipeline_resume_from_last_committed_snapshot(spark, transcripts, tmp_pa
             F.count(F.lit(1)).alias("n_turns")
         )
 
-    pipe = FeaturePipeline(
-        [FeatureStep("sess", s1), FeatureStep("agg", s2)], use_snapshots=True
-    )
+    pipe = FeaturePipeline([FeatureStep("sess", s1), FeatureStep("agg", s2)])
     ck = "file://" + str(tmp_path / "snap_ck")
     out1 = pipe.run(transcripts, checkpoint_dir=ck).toPandas()
     m1 = {m.step: m for m in pipe.metrics}
