@@ -32,6 +32,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import write_table
+from ..sources.snapshots import commit_snapshot, read_snapshot
+from .similarity import (
+    _commit_centroids,
+    _matrix_lit,
+    _probe_order,
+    _read_centroids,
+    _topk,
+    ivf_assign,
+    ivf_train,
+)
+
 __all__ = [
     "pq_train",
     "pq_encode",
@@ -123,7 +135,6 @@ def pq_train(
         )
         # assign: per-subspace argmin via a CASE over j (m branches, each a
         # native expression against that subspace's literal codebook)
-        code = F.lit(None).cast("int")
         expr = None
         for j in range(m):
             branch = _code_expr(F.col("sv"), codebooks[j])
@@ -191,6 +202,22 @@ def adc_lut(
     return lut
 
 
+def _adc_dist(
+    code_col: Column, codebooks: list[list[list[float]]], query: list[float]
+) -> Column:
+    """ADC distance of a PQ code to ``query``: sum over subspaces of
+    ``lut[j][code_j]`` — ``m`` array lookups inside one fused
+    zip_with/aggregate over the ``adc_lut`` literal."""
+    lut = _matrix_lit(adc_lut(codebooks, query))
+    return F.aggregate(
+        F.zip_with(
+            code_col, lut, lambda c, row: F.element_at(row, c + F.lit(1))
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def pq_adc_topk(
     codes: DataFrame,
     codebooks: list[list[list[float]]],
@@ -199,29 +226,12 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     code_col: str = "pq_code",
 ) -> DataFrame:
-    """Approximate k-NN by ADC over PQ codes: distance = sum over
-    subspaces of ``lut[j][code_j]`` — per row, ``m`` array lookups inside
-    one fused zip_with/aggregate (whole-stage codegen), then ascending
-    top-k via TakeOrderedAndProject (per-partition heaps; only k rows
-    cross the wire). Deterministic tie-break on id."""
-    lut = adc_lut(codebooks, query)
-    lut_lit = F.array(
-        *[F.array(*[F.lit(v) for v in row]) for row in lut]
-    )
-    dist = F.aggregate(
-        F.zip_with(
-            F.col(code_col),
-            lut_lit,
-            lambda c, row: F.element_at(row, c + F.lit(1)),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        codes.select(F.col(id_col), dist.alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.col(id_col))
-        .limit(k)
-    )
+    """Approximate k-NN by ADC over PQ codes (``_adc_dist``), then
+    ascending top-k via TakeOrderedAndProject (per-partition heaps; only k
+    rows cross the wire). Deterministic tie-break on id."""
+    dist = _adc_dist(F.col(code_col), codebooks, query)
+    scored = codes.select(F.col(id_col), dist.alias("adc_dist"))
+    return _topk(scored, "adc_dist", k, id_col, ascending=True)
 
 
 # ------------------------------------------------------------------ IVFADC
@@ -258,10 +268,6 @@ def build_ivfadc_index(
     the same contract as ivf_topk/build_ann_index, which cannot rank them
     either. Training cost: ivf_iters + pq_iters corpus passes, all
     map-combinable; every collect is centroid/codebook-sized."""
-    from ..sources.io import write_table
-    from ..sources.snapshots import commit_snapshot
-    from .similarity import ivf_assign, ivf_train
-
     spark = df.sparkSession
     coarse = ivf_train(
         df, n_centroids=n_centroids, iters=ivf_iters, id_col=id_col,
@@ -270,12 +276,9 @@ def build_ivfadc_index(
     assigned = ivf_assign(df, coarse, vec_col=vec_col).filter(
         F.col("ivf_cluster").isNotNull()
     )
-    cent_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in cv]) for cv in coarse]
-    )
     resid = F.zip_with(
         F.col(vec_col).cast("array<double>"),
-        F.element_at(cent_lit, F.col("ivf_cluster") + F.lit(1)),
+        F.element_at(_matrix_lit(coarse), F.col("ivf_cluster") + F.lit(1)),
         lambda a, b: a - b,
     )
     rdf = assigned.withColumn("_resid", resid)
@@ -287,11 +290,7 @@ def build_ivfadc_index(
         rdf, codebooks, id_col=id_col, vec_col="_resid",
         keep_cols=["ivf_cluster"],
     )
-    cent_df = spark.createDataFrame(
-        [(c, [float(x) for x in v]) for c, v in enumerate(coarse)],
-        "ivf_cluster int, centroid array<double>",
-    )
-    commit_snapshot(cent_df, f"{index_dir}/coarse_centroids", mode="overwrite")
+    _commit_centroids(spark, coarse, f"{index_dir}/coarse_centroids")
     cb_df = spark.createDataFrame(
         [
             (j, c, [float(x) for x in cent])
@@ -314,57 +313,27 @@ def ivfadc_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Probe a persisted IVFADC index: coarse centroids are ranked against
-    the query driver-side (n_centroids rows of pure Python), ONE residual
-    ADC lookup table is built per probed cluster (nprobe * m * k floats),
-    and only the nprobe ``codes`` partitions are scanned — partition
-    pruning on ``ivf_cluster IN (...)``, per-row scoring = a CASE over
-    nprobe branches each doing m array lookups, top-k =
-    TakeOrderedAndProject. No Lloyd jobs, no exchange, no float vectors
-    read: the serving cost is nprobe/n_centroids of a scan over m-byte-ish
-    codes. Ascending approximate-L2 distances, ties broken on id."""
-    import math
-
-    from ..sources.snapshots import last_committed_version, read_snapshot
-
-    def _read(table):
-        t = f"{index_dir}/{table}"
-        return read_snapshot(spark, t, last_committed_version(spark, t))
-
-    coarse = {
-        r["ivf_cluster"]: list(r["centroid"])
-        for r in _read("coarse_centroids").collect()
-    }
-    cb_rows = _read("pq_codebooks").collect()
+    the query driver-side (``_probe_order``), ONE residual ADC lookup
+    table is built per probed cluster (nprobe * m * k floats), and only
+    the nprobe ``codes`` partitions are scanned — partition pruning on
+    ``ivf_cluster IN (...)``, per-row scoring = a CASE over nprobe
+    branches each doing m array lookups, top-k = TakeOrderedAndProject.
+    No Lloyd jobs, no exchange, no float vectors read: the serving cost is
+    nprobe/n_centroids of a scan over m-byte-ish codes. Ascending
+    approximate-L2 distances, ties broken on id."""
+    coarse = _read_centroids(spark, f"{index_dir}/coarse_centroids")
+    cb_rows = read_snapshot(spark, f"{index_dir}/pq_codebooks").collect()
     m = max(r["j"] for r in cb_rows) + 1
     kk = max(r["c"] for r in cb_rows) + 1
     codebooks: list[list[list[float]]] = [[None] * kk for _ in range(m)]
     for r in cb_rows:
         codebooks[r["j"]][r["c"]] = list(r["centroid"])
 
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else float("-inf")
-
-    order = sorted(coarse, key=lambda c: -cos(query, coarse[c]))
-    probe = [int(c) for c in order[:nprobe]]
+    probe = _probe_order(query, coarse, nprobe)
     expr = None
     for c in probe:
         q_res = [q - cv for q, cv in zip(query, coarse[c])]
-        lut = adc_lut(codebooks, q_res)
-        lut_lit = F.array(
-            *[F.array(*[F.lit(v) for v in row]) for row in lut]
-        )
-        d_c = F.aggregate(
-            F.zip_with(
-                F.col("pq_code"),
-                lut_lit,
-                lambda code, row: F.element_at(row, code + F.lit(1)),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        d_c = _adc_dist(F.col("pq_code"), codebooks, q_res)
         expr = (
             F.when(F.col("ivf_cluster") == c, d_c)
             if expr is None
@@ -373,8 +342,5 @@ def ivfadc_topk(
     codes = spark.read.parquet(f"{index_dir}/codes").filter(
         F.col("ivf_cluster").isin(probe)
     )
-    return (
-        codes.select(F.col(id_col), expr.alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.col(id_col))
-        .limit(k)
-    )
+    scored = codes.select(F.col(id_col), expr.alias("adc_dist"))
+    return _topk(scored, "adc_dist", k, id_col, ascending=True)

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import _topk
+
 __all__ = [
     "sq8_fit",
     "sq8_encode",
@@ -124,11 +126,8 @@ def sq8_topk(
         ) / F.lit(255.0)
         term = (F.lit(float(query[i])) - deq) * (F.lit(float(query[i])) - deq)
         dist = term if dist is None else dist + term
-    return (
-        codes_df.select(id_col, dist.alias("sq8_dist"))
-        .orderBy(F.asc("sq8_dist"), F.col(id_col))
-        .limit(k)
-    )
+    scored = codes_df.select(id_col, dist.alias("sq8_dist"))
+    return _topk(scored, "sq8_dist", k, id_col, ascending=True)
 
 
 def pack_sign_words(vec: list[float]) -> list[int]:
@@ -193,8 +192,5 @@ def hamming_topk(
             F.element_at(code, w + 1).bitwiseXOR(F.lit(int(qw)).cast("bigint"))
         ).cast("bigint")
         dist = term if dist is None else dist + term
-    return (
-        codes_df.select(id_col, dist.alias("hamming_dist"))
-        .orderBy(F.asc("hamming_dist"), F.col(id_col))
-        .limit(k)
-    )
+    scored = codes_df.select(id_col, dist.alias("hamming_dist"))
+    return _topk(scored, "hamming_dist", k, id_col, ascending=True)

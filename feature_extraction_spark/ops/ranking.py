@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from feature_extraction_spark.functions.text import ws_tokens_expr
+from feature_extraction_spark.ops.similarity import _topk
 
 
 def _tokenize_query(query: str) -> list[str]:
@@ -139,4 +140,4 @@ def bm25_topk(
     rank_key = (
         F.round(F.col("bm25"), tie_digits) if tie_digits is not None else F.col("bm25")
     )
-    return scored.orderBy(F.desc(rank_key), F.col(id_col)).limit(k)
+    return _topk(scored, rank_key, k, id_col)

@@ -1,20 +1,36 @@
 """Similarity search over embedding columns (array<float>).
 
 - cosine_topk: brute-force exact top-k against one query vector — the
-  baseline. Dot products via zip_with/aggregate (JVM, codegen), global top-k
-  via orderBy+limit (Spark runs TakeOrdered, no full sort materialization).
+  baseline. Dot products via zip_with/aggregate (JVM, codegen).
 - lsh_topk: random-hyperplane LSH bucketing (deterministic seeded planes) —
   the scale path: candidates = rows sharing the query's bucket in >=1 of
   ``tables`` hash tables, re-ranked exactly. At 100 TB this turns a full
   scan into a bucket-pruned scan (bucket column is derivable at write time
   and partition-prunable).
-- knn_join_exact: small-query-set exact kNN via broadcast of the queries.
+- ivf_train / ivf_assign / ivf_topk: seeded Lloyd coarse quantizer and an
+  nprobe-cluster probe; build_ann_index / ivf_topk_indexed persist the
+  index and probe it with partition pruning.
+- knn_join_exact, hard_negatives: per-query top-k for a small query set.
+- cosine_neardup_pairs, semdedup_pairs / semdedup, pool_embeddings.
+
+Shared rules. Every single-query top-k (here and in ops/pq.py,
+ops/quantize.py, ops/ranking.py) ranks through ``_topk``: score desc (asc
+for distances), ties on ascending id, first k rows — a
+TakeOrderedAndProject, no global sort, no exchange. A zero-norm vector has
+no direction: its Spark-side cosine is NULL (0/0), so it joins no cluster,
+and on the driver ``_probe_order`` scores a zero-norm centroid -inf, so it
+is probed last.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..sources.io import write_table
+from ..sources.snapshots import commit_snapshot, read_snapshot
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -35,6 +51,17 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _topk(
+    scored: DataFrame, score: Column | str, k: int, id_col: str,
+    ascending: bool = False,
+) -> DataFrame:
+    """The one rank order of every single-query top-k operator: ``score``
+    descending (ascending for distances), ties on ascending ``id_col``,
+    the first ``k`` rows. Plans as TakeOrderedAndProject."""
+    order = F.asc(score) if ascending else F.desc(score)
+    return scored.orderBy(order, F.col(id_col)).limit(k)
+
+
 def cosine_topk(
     df: DataFrame,
     query: list[float],
@@ -48,7 +75,7 @@ def cosine_topk(
         F.col(id_col),
         cosine_expr(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
     )
-    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
+    return _topk(scored, "cosine", k, id_col)
 
 
 def hyperplane_sign_expr(vec: Column, plane_idx: int, dim: int, seed: int) -> Column:
@@ -104,11 +131,36 @@ def lsh_topk(
         query_b = lsh_bucket_expr(q, dim, planes, t, seed)
         c = data_b == query_b
         cond = c if cond is None else (cond | c)
-    cands = df.filter(cond)
-    return (
-        cands.select(F.col(id_col), cosine_expr(vec, q).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
+    return cosine_topk(df.filter(cond), query, k, id_col, vec_col)
+
+
+def _query_pair_cosines(
+    data: DataFrame, queries: DataFrame, data_id: str, query_id: str,
+    vec_col: str,
+) -> DataFrame:
+    """``(query_id, data_id, cosine)`` for every (corpus row, query) pair:
+    the small query set is broadcast, the corpus is scanned once."""
+    d = data.select(
+        F.col(data_id), F.col(vec_col).cast("array<double>").alias("_dv")
+    )
+    qdf = queries.select(
+        F.col(query_id), F.col(vec_col).cast("array<double>").alias("_qv")
+    )
+    return d.crossJoin(F.broadcast(qdf)).select(
+        query_id,
+        data_id,
+        cosine_expr(F.col("_dv"), F.col("_qv")).alias("cosine"),
+    )
+
+
+def _topk_per_query(
+    scored: DataFrame, k: int, query_id: str, data_id: str
+) -> DataFrame:
+    """Per-query form of the ``_topk`` order (cosine desc, data_id asc),
+    with the 1-based position kept as ``rank``."""
+    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(data_id))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
 
 
@@ -122,21 +174,8 @@ def knn_join_exact(
 ) -> DataFrame:
     """Exact kNN join for a SMALL query set: broadcast queries, score every
     (data, query) pair, keep top-k per query via window rank."""
-    from pyspark.sql import Window
-
-    d = data.select(F.col(data_id), F.col(vec_col).cast("array<double>").alias("_dv"))
-    qdf = queries.select(
-        F.col(query_id), F.col(vec_col).cast("array<double>").alias("_qv")
-    )
-    scored = d.crossJoin(F.broadcast(qdf)).select(
-        query_id,
-        data_id,
-        cosine_expr(F.col("_dv"), F.col("_qv")).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(data_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    scored = _query_pair_cosines(data, queries, data_id, query_id, vec_col)
+    return _topk_per_query(scored, k, query_id, data_id)
 
 
 def _partition_topk_candidates(
@@ -202,25 +241,13 @@ def hard_negatives(
     per-query row_number window receives at most k x P x |Q| candidate
     rows (P = input partitions) instead of |corpus| x |Q| — the round-4
     shape that concentrated the whole scored corpus onto |Q| reducers is
-    gone (plan + bound pinned in tests/test_similarity_ann.py).
+    gone (plan + bound pinned in tests/test_dedup_similarity.py).
     ``partition_prefilter=False`` keeps the pure-JVM window form for
     tiny corpora. At corpus scales where exact scoring itself is too
     wide, generate candidates with the persisted IVF/IVFADC index first
     and feed THAT as ``data`` — this op composes unchanged.
     """
-    from pyspark.sql import Window
-
-    d = data.select(
-        F.col(data_id), F.col(vec_col).cast("array<double>").alias("_dv")
-    )
-    qdf = queries.select(
-        F.col(query_id), F.col(vec_col).cast("array<double>").alias("_qv")
-    )
-    scored = d.crossJoin(F.broadcast(qdf)).select(
-        query_id,
-        data_id,
-        cosine_expr(F.col("_dv"), F.col("_qv")).alias("cosine"),
-    )
+    scored = _query_pair_cosines(data, queries, data_id, query_id, vec_col)
     scored = scored.filter(
         F.col("cosine").isNotNull() & ~F.isnan("cosine")
     )
@@ -230,22 +257,16 @@ def hard_negatives(
     )
     if partition_prefilter:
         filtered = _partition_topk_candidates(filtered, query_id, data_id, k)
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.col(data_id))
-    return filtered.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk_per_query(filtered, k, query_id, data_id)
 
 
 # ---------------------------------------------------------------- IVF
 
 
-def _centroid_cosines(vec: Column, centroids: list[list[float]]) -> Column:
-    """array<double> of cosine(vec, c) for each centroid (broadcast as an
-    array-of-arrays literal — centroid sets are small by construction)."""
-    cents = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
-    return F.transform(cents, lambda c: cosine_expr(vec, c))
+def _matrix_lit(rows: list[list[float]]) -> Column:
+    """array<array<double>> literal (centroids, lookup tables — small by
+    construction, inlined instead of broadcast)."""
+    return F.array(*[F.array(*[F.lit(float(x)) for x in r]) for r in rows])
 
 
 def ivf_assign(
@@ -257,7 +278,7 @@ def ivf_assign(
     """Assign each row to its max-cosine centroid. At write time this column
     becomes the table's partition/bucket key, so probes prune scans."""
     vec = F.col(vec_col).cast("array<double>")
-    sims = _centroid_cosines(vec, centroids)
+    sims = F.transform(_matrix_lit(centroids), lambda c: cosine_expr(vec, c))
     return df.withColumn(
         out_col, (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
     )
@@ -308,6 +329,41 @@ def ivf_train(
     return centroids
 
 
+def _probe_order(
+    query: list[float], centroids: list[list[float]], nprobe: int
+) -> list[int]:
+    """The ``nprobe`` centroid ids (list positions) nearest to ``query`` by
+    cosine, ranked on the driver (n_centroids vectors of pure Python). A
+    zero-norm centroid or query scores -inf, so it sorts last instead of
+    poisoning the sort with NaN keys; ties go to the lower centroid id."""
+
+    def cos(a, b):
+        d = sum(x * y for x, y in zip(a, b))
+        na = math.sqrt(sum(x * x for x in a))
+        nb = math.sqrt(sum(x * x for x in b))
+        return d / (na * nb) if na and nb else float("-inf")
+
+    order = sorted(
+        range(len(centroids)), key=lambda c: (-cos(query, centroids[c]), c)
+    )
+    return order[:nprobe]
+
+
+def _commit_centroids(spark, centroids: list[list[float]], table: str) -> None:
+    """Snapshot-commit ``(ivf_cluster int, centroid array<double>)`` rows,
+    cluster id = list position (index rebuilds are atomic swaps)."""
+    rows = [(c, [float(x) for x in v]) for c, v in enumerate(centroids)]
+    schema = "ivf_cluster int, centroid array<double>"
+    commit_snapshot(spark.createDataFrame(rows, schema), table)
+
+
+def _read_centroids(spark, table: str) -> list[list[float]]:
+    """The latest ``_commit_centroids`` snapshot, indexed by cluster id."""
+    rows = read_snapshot(spark, table).collect()
+    by_id = {r["ivf_cluster"]: list(r["centroid"]) for r in rows}
+    return [by_id[c] for c in range(len(by_id))]
+
+
 def ivf_topk(
     df: DataFrame,
     query: list[float],
@@ -317,31 +373,16 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF probe: rank centroids against the query driver-side (pure Python
-    on n_centroids vectors), scan only the ``nprobe`` nearest clusters,
-    re-rank those candidates exactly. With the cluster column materialized
-    as a partition key, the filter becomes partition pruning — the 100 TB
-    path scans nprobe/n_centroids of the table."""
-    import math
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else float("nan")
-
-    order = sorted(range(len(centroids)), key=lambda c: -cos(query, centroids[c]))
-    probe = order[:nprobe]
-    vec = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(x)) for x in query])
+    """IVF probe: rank centroids against the query driver-side
+    (``_probe_order``), scan only the ``nprobe`` nearest clusters, re-rank
+    those candidates exactly. With the cluster column materialized as a
+    partition key, the filter becomes partition pruning — the 100 TB path
+    scans nprobe/n_centroids of the table."""
+    probe = _probe_order(query, centroids, nprobe)
     cands = ivf_assign(df, centroids, vec_col=vec_col).filter(
         F.col("ivf_cluster").isin(probe)
     )
-    return (
-        cands.select(F.col(id_col), cosine_expr(vec, q).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return cosine_topk(cands, query, k, id_col, vec_col)
 
 
 def build_ann_index(
@@ -364,19 +405,11 @@ def build_ann_index(
     query the way ``ivf_train`` + ``ivf_topk`` do. Zero-norm vectors
     (NULL cluster) land in the Hive default partition and are never
     probed — same contract as ivf_topk, which can't rank them either."""
-    from ..sources.io import write_table
-    from ..sources.snapshots import commit_snapshot
-
-    spark = df.sparkSession
     centroids = ivf_train(
         df, n_centroids=n_centroids, iters=iters, id_col=id_col,
         vec_col=vec_col, seed=seed,
     )
-    cent_rows = [(c, [float(x) for x in v]) for c, v in enumerate(centroids)]
-    cent_df = spark.createDataFrame(
-        cent_rows, "ivf_cluster int, centroid array<double>"
-    )
-    commit_snapshot(cent_df, f"{index_dir}/centroids", mode="overwrite")
+    _commit_centroids(df.sparkSession, centroids, f"{index_dir}/centroids")
     assigned = ivf_assign(df, centroids, vec_col=vec_col).select(
         id_col, vec_col, "ivf_cluster"
     )
@@ -402,34 +435,12 @@ def ivf_topk_indexed(
     partition filter — the plan has no Lloyd jobs and no exchange; the
     top-k is TakeOrderedAndProject). This is the serving path that makes
     IVF pay at scale: cost = nprobe/n_centroids of one table scan."""
-    import math
-
-    from ..sources.snapshots import last_committed_version, read_snapshot
-
-    cent_t = f"{index_dir}/centroids"
-    cents = read_snapshot(
-        spark, cent_t, last_committed_version(spark, cent_t)
-    ).collect()
-    centroids = {r["ivf_cluster"]: list(r["centroid"]) for r in cents}
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else float("nan")
-
-    order = sorted(centroids, key=lambda c: -cos(query, centroids[c]))
-    probe = [int(c) for c in order[:nprobe]]
-    vec = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(x)) for x in query])
+    centroids = _read_centroids(spark, f"{index_dir}/centroids")
+    probe = _probe_order(query, centroids, nprobe)
     cands = spark.read.parquet(f"{index_dir}/assignments").filter(
         F.col("ivf_cluster").isin(probe)
     )
-    return (
-        cands.select(F.col(id_col), cosine_expr(vec, q).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return cosine_topk(cands, query, k, id_col, vec_col)
 
 
 # ------------------------------------------------- embedding near-dup pairs

@@ -18,7 +18,10 @@ table carrying the batch-id watermark LAST — so a crash anywhere in the
 window replays the batch, the anti-join guards make the bands/docs
 commits content-idempotent, and a batch whose pairs are already committed
 is skipped entirely (same exactly-once recipe as
-streaming/feature_store.py, tested by direct replay).
+streaming/feature_store.py, tested by direct replay). The pairs commit
+also records the stream key (the checkpoint location): a restart with a
+fresh checkpoint restarts batch ids at 0 and raises instead of silently
+skipping every batch up to the old watermark.
 
 The invariant inherited from the batch op: after any prefix of batches,
 ``pairs`` equals the full-corpus ``minhash_lsh_dedup`` pair set over the
@@ -38,9 +41,9 @@ from feature_extraction_spark.sources.snapshots import (
     commit_snapshot,
     expire_snapshots,
     last_committed_version,
-    read_manifest,
     read_snapshot,
 )
+from feature_extraction_spark.streaming.feature_store import _batch_commit_meta
 
 def make_dedup_upserter(
     state_dir: str,
@@ -53,6 +56,9 @@ def make_dedup_upserter(
 ):
     """The ``foreachBatch`` callable maintaining the three dedup states.
 
+    ``stream_key`` identifies the stream (``stream_dedup_pairs`` passes
+    the checkpoint location); state written under another key raises.
+
     ``lsh_kwargs`` (num_hashes/bands/shingle_n/seed/method) must stay
     constant for the lifetime of a state directory — signatures are pure
     functions of them, and states under different configs do not compose.
@@ -64,11 +70,11 @@ def make_dedup_upserter(
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         last_pairs = last_committed_version(spark, pairs_t)
-        if last_pairs is not None:
-            m = read_manifest(spark, pairs_t, last_pairs)
-            done = m.get("stream_batch_id")
-            if done is not None and int(batch_id) <= int(done):
-                return  # replay of a fully-committed batch
+        meta = _batch_commit_meta(
+            spark, pairs_t, last_pairs, batch_id, stream_key
+        )
+        if meta is None:
+            return  # replay of a fully-committed batch
         batch = (
             batch_df.select(
                 F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
@@ -116,9 +122,6 @@ def make_dedup_upserter(
             old_bands, old_docs, batch, id_col="doc_id", text_col="text",
             threshold=threshold, **lsh_kwargs,
         )
-        meta = {"stream_batch_id": int(batch_id)}
-        if stream_key is not None:
-            meta["stream_key"] = stream_key
         commit_snapshot(new_bands, bands_t, mode="overwrite", extra_meta=meta)
         commit_snapshot(
             old_docs.unionByName(batch), docs_t, mode="overwrite",
@@ -143,9 +146,12 @@ def stream_dedup_pairs(
 ):
     """Attach the dedup upserter to a streaming documents source. Returns
     the StreamingQuery; the accumulated pair set is the latest snapshot of
-    ``{state_dir}/pairs`` (read via sources/snapshots.read_snapshot)."""
+    ``{state_dir}/pairs`` (read via sources/snapshots.read_snapshot).
+    The checkpoint location is the stream key recorded in every commit."""
     writer = stream.writeStream.foreachBatch(
-        make_dedup_upserter(state_dir, **upserter_kwargs)
+        make_dedup_upserter(
+            state_dir, stream_key=checkpoint_dir, **upserter_kwargs
+        )
     ).option("checkpointLocation", checkpoint_dir)
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)

@@ -39,6 +39,40 @@ from feature_extraction_spark.sources.snapshots import (
 )
 
 
+def _batch_commit_meta(
+    spark, table: str, last: int | None, batch_id: int,
+    stream_key: str | None, allow_stream_handover: bool = False,
+) -> dict | None:
+    """Replay and stream-identity guard shared by the streaming upserters:
+    the manifest metadata to commit ``batch_id`` with, or None when
+    ``table`` (latest version ``last``) already holds it. A table last
+    written under another ``stream_key`` raises (see make_state_upserter)
+    unless ``allow_stream_handover``."""
+    if last is not None:
+        m = read_manifest(spark, table, last)
+        recorded_key, done = m.get("stream_key"), m.get("stream_batch_id")
+        keys = (stream_key, recorded_key)
+        if None not in keys and recorded_key != stream_key:
+            if not allow_stream_handover:
+                raise RuntimeError(
+                    f"state table {table!r} was last written by "
+                    f"stream {recorded_key!r}, not {stream_key!r} — its "
+                    "batch-id watermark is meaningless for this query "
+                    "and folding a restarted-from-scratch stream would "
+                    "double-count history. Reuse the original "
+                    "checkpoint or target a fresh state table (the "
+                    "feature-store upserters also take "
+                    "allow_stream_handover=True for a deliberate handover)."
+                )
+            # deliberate handover: fold regardless of the old watermark
+        elif done is not None and int(batch_id) <= int(done):
+            return None
+    meta = {"stream_batch_id": int(batch_id)}
+    if stream_key is not None:
+        meta["stream_key"] = stream_key
+    return meta
+
+
 def make_state_upserter(
     state_table: str,
     value_col: str | None = None,
@@ -102,38 +136,17 @@ def make_state_upserter(
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         last = last_committed_version(spark, state_table)
-        if last is not None:
-            m = read_manifest(spark, state_table, last)
-            done = m.get("stream_batch_id")
-            recorded_key = m.get("stream_key")
-            same_stream = (
-                stream_key is None
-                or recorded_key is None
-                or recorded_key == stream_key
-            )
-            if not same_stream:
-                if not allow_stream_handover:
-                    raise RuntimeError(
-                        f"state table {state_table!r} was last written by "
-                        f"stream {recorded_key!r}, not {stream_key!r} — its "
-                        "batch-id watermark is meaningless for this query "
-                        "and folding a restarted-from-scratch stream would "
-                        "double-count history. Reuse the original "
-                        "checkpoint, target a fresh state table, or pass "
-                        "allow_stream_handover=True for a deliberate "
-                        "handover."
-                    )
-                # deliberate handover: fold regardless of the old watermark
-            elif done is not None and int(batch_id) <= int(done):
-                return  # replay of an already-committed batch
+        meta = _batch_commit_meta(
+            spark, state_table, last, batch_id, stream_key,
+            allow_stream_handover,
+        )
+        if meta is None:
+            return  # replay of an already-committed batch
         delta = partial_fn(batch_df)
         if last is None:
             state = delta
         else:
             state = merge_fn(read_snapshot(spark, state_table, last), delta)
-        meta = {"stream_batch_id": int(batch_id)}
-        if stream_key is not None:
-            meta["stream_key"] = stream_key
         commit_snapshot(state, state_table, mode="overwrite", extra_meta=meta)
         expire_snapshots(spark, state_table, keep_last=keep_snapshots)
 

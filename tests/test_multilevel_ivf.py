@@ -14,6 +14,7 @@ from feature_extraction_spark.ops.similarity import (
     ivf_assign,
     ivf_topk,
     ivf_train,
+    lsh_topk,
 )
 
 
@@ -119,6 +120,49 @@ def test_ivf_prunes_scan(spark, embeddings):
     order = sorted(range(len(cents)), key=lambda c: -cos(q, cents[c]))
     probed = assigned.filter(F.col("ivf_cluster").isin(order[:2])).count()
     assert 0 < probed < total
+
+
+def test_ivf_probe_skips_zero_norm_centroid(spark):
+    """A zero-norm centroid (ivf_train can seed one from a zero row; it
+    never gains members, so Lloyd keeps it) has no cosine to the query.
+    It must rank last, not scramble the probe order: with nprobe=1 the
+    probe must hit the cluster nearest the query and return its exact
+    top-k."""
+    rows = [
+        (0, [1.0, 0.1]), (1, [0.9, -0.1]), (2, [1.0, 0.3]), (3, [0.8, 0.0]),
+        (4, [0.1, 1.0]), (5, [0.0, 0.9]), (6, [-0.1, 1.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = [[0.1, 1.0], [0.0, 0.0], [1.0, 0.05]]
+    q = [1.0, 0.0]
+    members = ivf_assign(df, cents).filter(F.col("ivf_cluster") == 2)
+    assert members.count() == 4
+    exp = cosine_topk(members, q, k=3).collect()
+    got = ivf_topk(df, q, cents, k=3, nprobe=1).collect()
+    assert [r.vec_id for r in got] == [r.vec_id for r in exp]
+    assert [r.vec_id for r in got] == [3, 0, 1]
+
+
+@pytest.mark.parametrize("op", ["cosine_topk", "lsh_topk", "ivf_topk"])
+def test_single_query_topk_plans_take_ordered(spark, embeddings, tmp_path, op):
+    """Every single-query top-k ranks through one policy that plans as
+    TakeOrderedAndProject: per-partition heaps, no global sort, no
+    exchange."""
+    p = str(tmp_path / "emb")
+    embeddings.write.mode("overwrite").parquet(p)
+    scan = spark.read.parquet(p)
+    q = [float(x) for x in embeddings.first()["embedding"]]
+    if op == "cosine_topk":
+        out = cosine_topk(scan, q, k=5)
+    elif op == "lsh_topk":
+        out = lsh_topk(scan, q, k=5)
+    else:
+        cents = [[float(x) for x in r["embedding"]] for r in embeddings.take(3)]
+        out = ivf_topk(scan, q, cents, k=5, nprobe=2)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "Exchange" not in plan, plan
+    assert "Sort [" not in plan, plan
 
 
 def test_cosine_neardup_lsh_recall(spark, embeddings):

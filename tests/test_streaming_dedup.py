@@ -3,11 +3,13 @@ accumulated pair snapshot equals the batch minhash_lsh_dedup over all
 documents ingested so far; batch replay (the crash window) is idempotent."""
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from feature_extraction_spark.ops.dedup import minhash_lsh_dedup
 from feature_extraction_spark.sources.snapshots import (
     last_committed_version,
+    read_manifest,
     read_snapshot,
 )
 from feature_extraction_spark.streaming.dedup import (
@@ -116,9 +118,46 @@ def test_real_stream_availablenow(spark, docs, tmp_path):
     )
     second.write.mode("append").parquet(src)
     catchup()
-    assert _state_pairs(spark, state) == _pairs_set(
-        minhash_lsh_dedup(docs, threshold=0.8, **CFG)
+    full = _pairs_set(minhash_lsh_dedup(docs, threshold=0.8, **CFG))
+    assert _state_pairs(spark, state) == full
+    pairs_t = f"{state}/pairs"
+    m = read_manifest(spark, pairs_t, last_committed_version(spark, pairs_t))
+    assert m["stream_key"] == ckpt
+
+    # a restart with a FRESH checkpoint replays the source from batch 0:
+    # the query must fail, not skip its batches under the old watermark
+    stream = spark.readStream.schema(docs.schema).parquet(src)
+    q = stream_dedup_pairs(
+        stream, state, str(tmp_path / "ckpt_fresh"), threshold=0.8, **CFG
     )
+    with pytest.raises(StreamingQueryException, match="was last written"):
+        q.awaitTermination(300)
+    assert _state_pairs(spark, state) == full
+
+
+def test_fresh_checkpoint_raises_not_silently_skips(spark, docs, tmp_path):
+    """A stream restarted with a NEW checkpoint restarts batch ids at 0; a
+    bare numeric watermark would silently skip all its batches up to the
+    old high-water mark (data loss). The upserter must refuse loudly and
+    leave the states untouched."""
+    state = str(tmp_path / "state_fresh")
+    b0 = docs.filter(F.col("doc_id") % 3 == 0)
+    b1 = docs.filter(F.col("doc_id") % 3 == 1)
+    up_a = make_dedup_upserter(state, threshold=0.8, stream_key="ckpt-A", **CFG)
+    up_a(b0, 0)
+    up_a(b1, 1)
+    before = {
+        t: last_committed_version(spark, f"{state}/{t}")
+        for t in ("bands", "docs", "pairs")
+    }
+    up_b = make_dedup_upserter(state, threshold=0.8, stream_key="ckpt-B", **CFG)
+    with pytest.raises(RuntimeError, match="ckpt-A"):
+        up_b(docs.filter(F.col("doc_id") % 3 == 2), 0)
+    for t, v in before.items():
+        assert last_committed_version(spark, f"{state}/{t}") == v
+    # the original stream's replay guard is unchanged
+    up_a(b1, 1)
+    assert last_committed_version(spark, f"{state}/pairs") == before["pairs"]
 
 
 def test_string_id_corpus_keeps_declared_pair_schema(spark, docs, tmp_path):
