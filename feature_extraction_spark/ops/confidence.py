@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_extraction_spark.functions.text import nan
 from feature_extraction_spark.ops.levels import keys_for
+from feature_extraction_spark.ops.stats import stat_aggs
 
 
 def confidence_stats(
@@ -24,17 +24,8 @@ def confidence_stats(
     is NULL still gets a row with NaN stats (the library's 'NaN, never
     NULL' null object — a pre-filter would drop the entity entirely)."""
     keys = keys_for(level)
-    c = F.col(score_col)
-    out = df.groupBy(*keys).agg(
-        F.max(c).cast("double").alias("conf_max"),
-        F.mean(c).alias("conf_mean"),
-        F.stddev_pop(c).alias("conf_std"),
-        F.min(c).cast("double").alias("conf_min"),
-        F.median(c).alias("conf_med"),
-        F.count(c).alias("_n"),
+    return (
+        df.groupBy(*keys)
+        .agg(*stat_aggs(F.col(score_col), "conf"))
+        .select(*keys, "conf_max", "conf_mean", "conf_std", "conf_min", "conf_med")
     )
-    for col in ("conf_max", "conf_mean", "conf_std", "conf_min", "conf_med"):
-        out = out.withColumn(
-            col, F.when(F.col("_n") == 0, nan()).otherwise(F.col(col))
-        )
-    return out.drop("_n")

@@ -5,7 +5,8 @@
 The algebra: a stat STATE per entity — (n, sum, sumsq, min, max) — is
 - computable per shard with one hash aggregation,
 - mergeable by another hash aggregation (sum/sum/sum/min/max),
-- finalizable to count/mean/stddev_pop/min/max at read time.
+- finalizable to count/mean/population std/min/max at read time
+  (ops/stats.moment_stats).
 
 Pair it with ``sources/snapshots.py``: each `commit_snapshot(mode='append')`
 records exactly which files are new, ``snapshot_delta`` reads ONLY those
@@ -35,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from feature_extraction_spark.ops.levels import keys_for
+from feature_extraction_spark.ops.stats import moment_stats
 
 STATE_COLS = ("n", "sum", "sumsq", "min", "max")
 
@@ -74,13 +76,12 @@ def finalize_stat_state(state: DataFrame, prefix: str) -> DataFrame:
     """State -> the A2-bundle columns {prefix}_{count,mean,std,min,max}
     (population std; variance clamped at 0 against round-off)."""
     keys = [c for c in state.columns if c not in STATE_COLS]
-    mean = F.col("sum") / F.col("n")
-    var = F.greatest(F.col("sumsq") / F.col("n") - mean * mean, F.lit(0.0))
+    mean, std = moment_stats(F.col("n"), F.col("sum"), F.col("sumsq"))
     return state.select(
         *keys,
         F.col("n").cast("double").alias(f"{prefix}_count"),
         mean.alias(f"{prefix}_mean"),
-        F.sqrt(var).alias(f"{prefix}_std"),
+        std.alias(f"{prefix}_std"),
         F.col("min").alias(f"{prefix}_min"),
         F.col("max").alias(f"{prefix}_max"),
     )

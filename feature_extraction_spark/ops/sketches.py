@@ -1,7 +1,9 @@
 """Approximate / sketch aggregations — the 100 TB grain of the stat packs.
 
-The exact A2 bundles (ops/turn_stats.py, ops/timing.py) use `median`, which
-Spark computes exactly (full per-group sort of the values). At 10^12 turns
+The exact A2 bundle (ops/stats.stat_aggs: the timing, confidence and latency
+packs) uses `median`, which Spark computes exactly (full per-group sort of
+the values; verbosity derives its exact median from an integer histogram,
+ops/turn_stats.py). At 10^12 turns
 an exact per-entity median is affordable only because groups are small; the
 CORPUS-level percentiles, distinct counts, and vocabulary sizes that a
 training-data pipeline tracks per shard are not. These operators are the
@@ -39,6 +41,7 @@ from pyspark.sql import types as T
 
 from feature_extraction_spark.functions.text import ws_tokens_expr
 from feature_extraction_spark.ops.levels import keys_for
+from feature_extraction_spark.ops.stats import stat_aggs
 
 
 def approx_stat_bundle(
@@ -47,17 +50,16 @@ def approx_stat_bundle(
     """max/min/mean/med/std aggregate list with the sketch median.
 
     `percentile_approx` keeps a bounded summary (~`accuracy` centroids) per
-    group and is map-side mergeable; rank error <= 1/accuracy. Column names
-    match ops/timing._bundle so the exact and approx bundles are
-    interchangeable in a pack's agg list."""
+    group and is map-side mergeable; rank error <= 1/accuracy. Everything
+    else — column names, population std, NaN for an all-NULL group — is the
+    exact bundle's (ops/stats.stat_aggs), so the two are interchangeable in
+    a pack's agg list."""
     c = F.col(col) if isinstance(col, str) else col
-    return [
-        F.max(c).cast("double").alias(f"{prefix}_max"),
-        F.min(c).cast("double").alias(f"{prefix}_min"),
-        F.mean(c).alias(f"{prefix}_mean"),
-        F.percentile_approx(c, 0.5, accuracy).cast("double").alias(f"{prefix}_med"),
-        F.stddev_pop(c).alias(f"{prefix}_std"),
-    ]
+
+    def median(v):
+        return F.percentile_approx(v, 0.5, accuracy).cast("double")
+
+    return stat_aggs(c, prefix, median=median)
 
 
 def approx_quantiles(

@@ -15,8 +15,9 @@ Reference semantics:
 
 Spark-first: silence extraction is array algebra over the typed
 ``word_timing`` column (transform-with-index lag-gap — no explode until the
-aggregation, no Python); then three grain-specific hash aggregations
-(turn / word / silence) joined on the entity keys.
+aggregation, no Python); then one tagged value stream and ONE conditional
+hash aggregation for every grain (``_timing_pack``, shared with the Kaldi
+pack in sources/kaldi.py).
 """
 
 from __future__ import annotations
@@ -26,28 +27,17 @@ from pyspark.sql import functions as F
 
 from feature_extraction_spark.functions.text import nan, nan_guard_div
 from feature_extraction_spark.ops.levels import keys_for
+from feature_extraction_spark.ops.stats import stat_aggs
 
-
-def _bundle(col, prefix: str):
-    return [
-        F.max(col).cast("double").alias(f"{prefix}_max"),
-        F.min(col).cast("double").alias(f"{prefix}_min"),
-        F.mean(col).alias(f"{prefix}_mean"),
-        F.median(col).alias(f"{prefix}_med"),
-        F.stddev_pop(col).alias(f"{prefix}_std"),
-    ]
+# grain tag -> stat-bundle prefix (tags not listed are their own prefix)
+_PREFIX = {"seg": "segments", "word": "words", "phone": "phones", "sil": "silences"}
+# array grain tag -> per-speaking-second rate, in the reference's column order
+_RATE = {"sil": "sps", "word": "wps", "phone": "pps"}
 
 
 def tag_struct(k: str, v):
-    """(k, v) struct for the tagged value stream — SHARED by this kernel
-    and the Kaldi variant (sources/kaldi.py) so the stream encoding cannot
-    drift between them."""
+    """(k, v) struct of the tagged value stream built by ``_timing_pack``."""
     return F.struct(F.lit(k).alias("k"), v.cast("double").alias("v"))
-
-
-def cond_stat_bundle(kind: str, prefix: str):
-    """max/min/mean/med/std of the tagged stream's values for one grain."""
-    return _bundle(F.when(F.col("k") == kind, F.col("v")), prefix)
 
 
 def with_turn_timing(df: DataFrame) -> DataFrame:
@@ -101,78 +91,71 @@ def with_turn_timing(df: DataFrame) -> DataFrame:
     )
 
 
-def timing_stats(
-    df: DataFrame,
-    level: str = "conv",
-    durations: DataFrame | None = None,
+def _timing_pack(
+    rows: DataFrame,
+    keys: list[str],
+    scalars: dict[str, str],
+    arrays: dict[str, str],
+    durations: DataFrame | None,
 ) -> DataFrame:
-    """One wide row per entity with the reference's timing features:
-    {segments,silences,words,wps}_{max,min,mean,med,std}, sil_duration,
-    spk_duration, spk_sil_ratio, sps, wps, sil_count, short_utt_count,
-    segment_count, word_count, total_duration, spk_ratio, sil_ratio,
-    segs_per_min, short_utts_per_min.
+    """The reference's timing kernel (get_feats) over per-segment ``rows``:
+    ``scalars`` maps a grain tag to the column holding its one value per
+    segment ('seg' = segment seconds, required), ``arrays`` maps a grain tag
+    to an array column of values per segment ('sil' = silence ms, required).
+    Bundles and counts come out in the order the grains are given, rates in
+    the reference's sps/wps/pps order.
 
-    ``durations``: optional dimension with the entity keys + ``duration_ms``;
-    pre-aggregated and broadcast-joined (replaces reference J2's per-group
-    scan). Without it total_duration-derived features are NaN.
-    """
-    keys = keys_for(level)
-    t = with_turn_timing(df)
-
-    # ONE tagged value stream + ONE conditional hash aggregation. The naive
-    # three-grain form (turn agg + word explode agg + silence explode agg,
-    # joined) evaluates the word_timing HOF chain once per grain and
-    # shuffles three times; higher-order array functions are interpreted
-    # (outside whole-stage codegen), so the repeated evaluation dominates.
-    # Tagging each value with its grain ('seg'/'wps'/'word'/'sil') costs one
-    # explode and shuffles once, with map-side partial aggregation.
-    tag = tag_struct
-    stream = t.select(
+    ONE tagged value stream + ONE conditional hash aggregation. The naive
+    per-grain form (one aggregation per grain, joined) evaluates the
+    upstream HOF chain once per grain and shuffles once per grain;
+    higher-order array functions are interpreted (outside whole-stage
+    codegen), so the repeated evaluation dominates. Tagging each value with
+    its grain costs one explode and shuffles once, with map-side partial
+    aggregation."""
+    stream = rows.select(
         *keys,
         F.explode(
             F.concat(
-                F.array(tag("seg", F.col("seg_sec"))),
-                F.array(tag("wps", F.col("wps_seg"))),
-                F.transform("word_durs_ms", lambda w: tag("word", w)),
-                F.transform("sil_durs_ms", lambda s: tag("sil", s)),
+                *(F.array(tag_struct(g, F.col(c))) for g, c in scalars.items()),
+                *(
+                    F.transform(c, lambda x: tag_struct(g, x))
+                    for g, c in arrays.items()
+                ),
             )
         ).alias("e"),
     ).select(*keys, F.col("e.k").alias("k"), F.col("e.v").alias("v"))
 
-    _cond_bundle = cond_stat_bundle
-    seg_v = F.when(F.col("k") == "seg", F.col("v"))
+    k, v = F.col("k"), F.col("v")
+    seg_v = F.when(k == "seg", v)
     out = stream.groupBy(*keys).agg(
-        *_cond_bundle("seg", "segments"),
-        *_cond_bundle("wps", "wps"),
-        *_cond_bundle("word", "words"),
-        *_cond_bundle("sil", "silences"),
+        *(
+            agg
+            for g in (*scalars, *arrays)
+            for agg in stat_aggs(F.when(k == g, v), _PREFIX.get(g, g))
+        ),
         F.sum(seg_v).alias("spk_duration"),
         F.count(seg_v).cast("double").alias("segment_count"),
-        F.sum(F.when((F.col("k") == "seg") & (F.col("v") <= 1.0), 1).otherwise(0))
+        F.sum(F.when((k == "seg") & (v <= 1.0), 1).otherwise(0))
         .cast("double")
         .alias("short_utt_count"),
-        F.count(F.when(F.col("k") == "word", 1)).cast("double").alias("word_count"),
-        F.count(F.when(F.col("k") == "sil", 1)).cast("double").alias("sil_count"),
-        (
-            F.coalesce(F.sum(F.when(F.col("k") == "sil", F.col("v"))), F.lit(0.0))
-            * 0.001
-        ).alias("sil_duration"),
+        # F.count yields 0, not NULL, for a group with no rows of the grain
+        *(
+            F.count(F.when(k == g, 1)).cast("double").alias(f"{g}_count")
+            for g in arrays
+        ),
+        (F.coalesce(F.sum(F.when(k == "sil", v)), F.lit(0.0)) * 0.001).alias(
+            "sil_duration"
+        ),
     )
-    # empty word/silence lists -> NaN bundles, zero counts (np.sum([]) == 0.0)
-    for p in ("words", "silences"):
-        for s in ("max", "min", "mean", "med", "std"):
-            out = out.withColumn(f"{p}_{s}", F.coalesce(F.col(f"{p}_{s}"), nan()))
-    # (word_count / sil_count need no coalesce: F.count returns 0, not
-    # NULL, for groups with no matching rows; sil_duration's coalesce is
-    # inside its aggregate above)
 
-    out = (
-        out.withColumn(
-            "spk_sil_ratio", nan_guard_div(F.col("spk_duration"), F.col("sil_duration"))
-        )
-        .withColumn("sps", nan_guard_div(F.col("sil_count"), F.col("spk_duration")))
-        .withColumn("wps", nan_guard_div(F.col("word_count"), F.col("spk_duration")))
+    out = out.withColumn(
+        "spk_sil_ratio", nan_guard_div(F.col("spk_duration"), F.col("sil_duration"))
     )
+    for g, rate in _RATE.items():
+        if g in arrays:
+            out = out.withColumn(
+                rate, nan_guard_div(F.col(f"{g}_count"), F.col("spk_duration"))
+            )
 
     if durations is not None:
         dim = durations.groupBy(*keys).agg(
@@ -184,20 +167,41 @@ def timing_stats(
     else:
         out = out.withColumn("total_duration", nan())
 
-    out = (
+    per_min = F.col("total_duration") / 60.0
+    return (
         out.withColumn(
             "spk_ratio", nan_guard_div(F.col("spk_duration"), F.col("total_duration"))
         )
         .withColumn(
             "sil_ratio", nan_guard_div(F.col("sil_duration"), F.col("total_duration"))
         )
+        .withColumn("segs_per_min", nan_guard_div(F.col("segment_count"), per_min))
         .withColumn(
-            "segs_per_min",
-            nan_guard_div(F.col("segment_count"), F.col("total_duration") / 60.0),
-        )
-        .withColumn(
-            "short_utts_per_min",
-            nan_guard_div(F.col("short_utt_count"), F.col("total_duration") / 60.0),
+            "short_utts_per_min", nan_guard_div(F.col("short_utt_count"), per_min)
         )
     )
-    return out
+
+
+def timing_stats(
+    df: DataFrame,
+    level: str = "conv",
+    durations: DataFrame | None = None,
+) -> DataFrame:
+    """One wide row per entity with the reference's timing features:
+    {segments,wps,words,silences}_{max,min,mean,med,std}, spk_duration,
+    segment_count, short_utt_count, word_count, sil_count, sil_duration,
+    spk_sil_ratio, sps, wps, total_duration, spk_ratio, sil_ratio,
+    segs_per_min, short_utts_per_min.
+
+    ``durations``: optional dimension with the entity keys + ``duration_ms``;
+    pre-aggregated and broadcast-joined (replaces reference J2's per-group
+    scan); an entity missing from it gets total_duration 0.0. Without it
+    total_duration-derived features are NaN.
+    """
+    return _timing_pack(
+        with_turn_timing(df),
+        keys_for(level),
+        scalars={"seg": "seg_sec", "wps": "wps_seg"},
+        arrays={"word": "word_durs_ms", "sil": "sil_durs_ms"},
+        durations=durations,
+    )

@@ -19,7 +19,7 @@ every statistic is then derived EXACTLY from the tiny histogram:
 - median: cumulative bucket counts over a window ordered by value — the
   (n+1) div 2 / n div 2 + 1 order statistics, averaged; equals
   ``F.median``'s interpolation exactly on integer inputs;
-- stddev_pop from exact integer moments (s2/n - mean^2, clamped at 0) —
+- population std from exact integer moments (ops/stats.moment_stats) —
   numerically exact for constant groups, and within ulps of Welford
   otherwise (values are small exact ints; verified against the DuckDB
   oracle and the numpy test kernels).
@@ -53,6 +53,7 @@ from feature_extraction_spark.functions.text import (
     tokenize_expr,
 )
 from feature_extraction_spark.ops.levels import keys_for
+from feature_extraction_spark.ops.stats import moment_stats
 
 
 def _hist_stat_bundle(
@@ -60,9 +61,8 @@ def _hist_stat_bundle(
     keys: list[str],
     prefix: str,
     extra_sums: list[str] | None = None,
-    suffix_std: str = "stdev",
 ) -> DataFrame:
-    """Per-key 5-stat bundle (mean/median/std/min/max, exact) from a
+    """Per-key 5-stat bundle (mean/median/stdev/min/max, exact) from a
     ``(keys..., v, c)`` integer histogram; ``extra_sums`` columns are
     summed through unconditionally (they are full-row sums carried on the
     buckets). NULL-v buckets keep the group alive but contribute to no
@@ -92,17 +92,14 @@ def _hist_stat_bundle(
         aggs.append(F.sum(c).alias(c))
     out = h.groupBy(*keys).agg(*aggs)
 
-    mean = F.col("_s1") / F.col("_n_")
-    var = F.greatest(
-        F.col("_s2") / F.col("_n_") - mean * mean, F.lit(0.0)
-    )
+    mean, std = moment_stats(F.col("_n_"), F.col("_s1"), F.col("_s2"))
     return (
         out.withColumn(f"{prefix}_mean", mean)
         .withColumn(
             f"{prefix}_median",
             ((F.col("_mlo") + F.col("_mhi")) / 2.0).cast("double"),
         )
-        .withColumn(f"{prefix}_{suffix_std}", F.sqrt(var))
+        .withColumn(f"{prefix}_stdev", std)
         .drop("_mlo", "_mhi", "_s2")
     )
 

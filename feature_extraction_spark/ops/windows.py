@@ -71,15 +71,12 @@ def latency_stats(df: DataFrame, level: str = "conv") -> DataFrame:
     """Descriptive-stat bundle over inter-turn gaps per entity
     (kernel shape from timing_features/extract_word_phone_timing.py:22-30)."""
     from feature_extraction_spark.ops.levels import keys_for
+    from feature_extraction_spark.ops.stats import stat_aggs
 
     keys = keys_for(level)
     gaps = with_inter_turn_latency(df).filter(F.col("gap_s").isNotNull())
     return gaps.groupBy(*keys).agg(
-        F.max("gap_s").alias("gap_max"),
-        F.min("gap_s").alias("gap_min"),
-        F.mean("gap_s").alias("gap_mean"),
-        F.median("gap_s").alias("gap_med"),
-        F.stddev_pop("gap_s").alias("gap_std"),
+        *stat_aggs(F.col("gap_s"), "gap"),
         F.count("gap_s").cast("double").alias("gap_count"),
     )
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from feature_extraction_spark.functions.text import nan_guard_div as _ng
+from feature_extraction_spark.ops.timing import _timing_pack
 
 MARKERS = ("sil", "[noise]", "[laughter]")
 
@@ -168,87 +169,21 @@ def kaldi_timing_stats(
     """Full Kaldi timing feature pack (reference get_feats with the phones
     variant, timing_features/extract_word_phone_timing.py:10-46 +
     kaldi_asr_features/extract_timing_feats.py:117-145): stat bundles for
-    segments/silences/words/phones/wps/pps + derived ratios, grouped by
-    arbitrary keys (the A1 level parameterization).
+    segments/wps/pps/words/phones/silences + derived ratios, grouped by
+    arbitrary keys (the A1 level parameterization). The same kernel as the
+    MS-ASR pack (ops/timing.py:_timing_pack), with the phone grain added.
 
     ``durations``: optional dim with group keys + ``duration_ms`` (summed
-    per group = reference J4's total call duration)."""
-    from feature_extraction_spark.functions.text import nan, nan_guard_div
-    from feature_extraction_spark.ops.timing import cond_stat_bundle, tag_struct
-
-    keys = list(group_keys)
-
-    # ONE tagged value stream + ONE conditional hash aggregation (same
-    # rationale as ops/timing.py:timing_stats, with the shared kernel
-    # helpers so the two packs cannot drift): the per-grain form re-ran
-    # the whole upstream parse + island pipeline once per grain (4x) and
-    # shuffled 4 times + 3 joins.
-    tag = tag_struct
-    stream = segment_times.select(
-        *keys,
-        F.explode(
-            F.concat(
-                F.array(tag("seg", F.col("seg_dur_sec"))),
-                F.array(tag("wps", F.col("wps"))),
-                F.array(tag("pps", F.col("pps"))),
-                F.transform("word_durs_ms", lambda w: tag("word", w)),
-                F.transform("phone_durs_ms", lambda p: tag("phone", p)),
-                F.transform("sil_durs_ms", lambda s: tag("sil", s)),
-            )
-        ).alias("e"),
-    ).select(*keys, F.col("e.k").alias("k"), F.col("e.v").alias("v"))
-
-    cond_bundle = cond_stat_bundle
-    seg_v = F.when(F.col("k") == "seg", F.col("v"))
-    out = stream.groupBy(*keys).agg(
-        *cond_bundle("seg", "segments"),
-        *cond_bundle("wps", "wps"),
-        *cond_bundle("pps", "pps"),
-        *cond_bundle("word", "words"),
-        *cond_bundle("phone", "phones"),
-        *cond_bundle("sil", "silences"),
-        F.sum(seg_v).alias("spk_duration"),
-        F.count(seg_v).cast("double").alias("segment_count"),
-        F.sum(F.when((F.col("k") == "seg") & (F.col("v") <= 1.0), 1).otherwise(0))
-        .cast("double")
-        .alias("short_utt_count"),
-        F.count(F.when(F.col("k") == "word", 1)).cast("double").alias("word_count"),
-        F.count(F.when(F.col("k") == "phone", 1)).cast("double").alias("phone_count"),
-        F.count(F.when(F.col("k") == "sil", 1)).cast("double").alias("sil_count"),
-        (
-            F.coalesce(F.sum(F.when(F.col("k") == "sil", F.col("v"))), F.lit(0.0))
-            * 0.001
-        ).alias("sil_duration"),
-    )
-    for p in ("words", "silences", "phones"):
-        for s in ("max", "min", "mean", "med", "std"):
-            out = out.withColumn(f"{p}_{s}", F.coalesce(F.col(f"{p}_{s}"), nan()))
-    # counts need no coalesce (F.count yields 0, not NULL); sil_duration's
-    # coalesce is inside its aggregate
-    out = (
-        out.withColumn("spk_sil_ratio", nan_guard_div(F.col("spk_duration"), F.col("sil_duration")))
-        .withColumn("sps", nan_guard_div(F.col("sil_count"), F.col("spk_duration")))
-        .withColumn("wps", nan_guard_div(F.col("word_count"), F.col("spk_duration")))
-        .withColumn("pps", nan_guard_div(F.col("phone_count"), F.col("spk_duration")))
-    )
-    if durations is not None:
-        dim = durations.groupBy(*keys).agg(
-            (F.sum("duration_ms") * 1e-3).alias("total_duration")
-        )
-        out = out.join(F.broadcast(dim), keys, "left")
-    else:
-        out = out.withColumn("total_duration", nan())
-    return (
-        out.withColumn("spk_ratio", nan_guard_div(F.col("spk_duration"), F.col("total_duration")))
-        .withColumn("sil_ratio", nan_guard_div(F.col("sil_duration"), F.col("total_duration")))
-        .withColumn(
-            "segs_per_min",
-            nan_guard_div(F.col("segment_count"), F.col("total_duration") / 60.0),
-        )
-        .withColumn(
-            "short_utts_per_min",
-            nan_guard_div(F.col("short_utt_count"), F.col("total_duration") / 60.0),
-        )
+    per group = reference J4's total call duration); a group missing from
+    it gets total_duration 0.0."""
+    return _timing_pack(
+        segment_times,
+        list(group_keys),
+        scalars={"seg": "seg_dur_sec", "wps": "wps", "pps": "pps"},
+        arrays={
+            "word": "word_durs_ms", "phone": "phone_durs_ms", "sil": "sil_durs_ms"
+        },
+        durations=durations,
     )
 
 

@@ -48,6 +48,40 @@ def test_kaldi_full_feature_pack(spark, kaldi_path2):
         )
 
 
+def test_kaldi_feature_pack_with_durations(spark, kaldi_path2):
+    """J4: ``durations`` is summed per group and broadcast-joined. A covered
+    group matches the timing oracle at that total; a group missing from
+    ``durations`` gets total_duration 0.0 (the MS-ASR pack's rule), so its
+    duration ratios are NaN."""
+    segs = kaldi_segment_times(read_kaldi_timing_lines(spark, kaldi_path2))
+    durations = spark.createDataFrame(
+        [("s1", "c1", 30_000), ("s1", "c1", 15_000)],
+        "subject string, call string, duration_ms long",
+    )
+    feats = {
+        r["call"]: r
+        for r in kaldi_timing_stats(segs, durations=durations).collect()
+    }
+    assert set(feats) == {"c1", "c2"}
+
+    raw_segments = [
+        [ln for ln in blk.splitlines()[1:] if ln.strip()]
+        for blk in KALDI_FILE.split('\n"')
+        if blk.strip()
+    ]
+    # c1's only word-bearing segment is the first (the second is all-sil)
+    exp = ok.timing_stats(_oracle_kaldi([raw_segments[0]]), 45.0)
+    for k, v in exp.items():
+        assert np.allclose(feats["c1"][k], v, equal_nan=True), (
+            f"{k}: {feats['c1'][k]} != {v}"
+        )
+
+    missing = feats["c2"]
+    assert missing["total_duration"] == 0.0
+    for k in ("spk_ratio", "sil_ratio", "segs_per_min", "short_utts_per_min"):
+        assert np.isnan(missing[k]), k
+
+
 def test_filter_groups_by_min_words(spark):
     import datetime as dt
 

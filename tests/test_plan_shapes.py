@@ -59,11 +59,17 @@ def test_asof_join_broadcast_no_fact_shuffle(spark, turns):
 
 def test_timing_stats_single_shuffle(spark):
     """U9 tagged-stream kernel: one explode + ONE conditional hash
-    aggregation — exactly one shuffle, not one per grain."""
+    aggregation — exactly one shuffle, not one per grain. The Kaldi pack
+    runs the same kernel, and the confidence and latency packs share its
+    stat bundle (ops/stats.stat_aggs): one exchange each as well."""
+    from feature_extraction_spark.ops.confidence import confidence_stats
     from feature_extraction_spark.ops.timing import timing_stats
+    from feature_extraction_spark.ops.windows import latency_stats
+    from feature_extraction_spark.sources.kaldi import kaldi_timing_stats
 
+    conv_id = F.concat(F.lit("c"), (F.col("id") % 7).cast("string")).alias("conv_id")
     df = spark.range(0, 1000).select(
-        F.concat(F.lit("c"), (F.col("id") % 7).cast("string")).alias("conv_id"),
+        conv_id,
         F.lit(0).cast("long").alias("offset"),
         F.lit(30_000_000).cast("long").alias("duration"),
         F.expr(
@@ -72,9 +78,32 @@ def test_timing_stats_single_shuffle(spark):
             "'Offset', bigint(i) * 2500000))"
         ).alias("word_timing"),
     )
-    out = timing_stats(df, level="conv", durations=None)
-    plan = _plan(out)
-    assert plan.count(SHUFFLE) == 1, plan
+    durs = F.expr("transform(sequence(0, int(id % 4)), i -> double(i) * 25.0)")
+    segment_times = spark.range(0, 1000).select(
+        F.lit("s1").alias("subject"),
+        conv_id.alias("call"),
+        F.lit(1.5).alias("seg_dur_sec"),
+        F.lit(2.0).alias("wps"),
+        F.lit(6.0).alias("pps"),
+        durs.alias("word_durs_ms"),
+        durs.alias("phone_durs_ms"),
+        durs.alias("sil_durs_ms"),
+    )
+    turns = spark.range(0, 1000).select(
+        conv_id,
+        F.col("id").cast("int").alias("turn_idx"),
+        F.timestamp_seconds(F.col("id") * 7).alias("ts"),
+        (F.col("id") % 10 / 10.0).alias("confidence"),
+    )
+    packs = {
+        "timing_stats": timing_stats(df, level="conv", durations=None),
+        "kaldi_timing_stats": kaldi_timing_stats(segment_times),
+        "confidence_stats": confidence_stats(turns, level="conv"),
+        "latency_stats": latency_stats(turns, level="conv"),
+    }
+    for name, out in packs.items():
+        plan = _plan(out)
+        assert plan.count(SHUFFLE) == 1, (name, plan)
 
 
 def test_windowed_flagship_chain_single_shuffle(spark, turns):

@@ -41,6 +41,23 @@ def test_approx_stat_bundle_matches_exact_on_small_groups(spark, transcripts):
         assert lo <= r["wc_med"] <= hi
 
 
+def test_approx_stat_bundle_all_null_group_is_nan(spark):
+    """The sketch bundle keeps the exact bundle's NaN rule: a group whose
+    every value is NULL keeps its row, with NaN (never NULL) in all five
+    columns."""
+    df = spark.createDataFrame(
+        [("a", 1.0), ("a", 3.0), ("b", None), ("b", None)], "g string, x double"
+    )
+    rows = {
+        r["g"]: r for r in df.groupBy("g").agg(*approx_stat_bundle("x", "x")).collect()
+    }
+    a = rows["a"]
+    assert (a["x_max"], a["x_min"], a["x_mean"], a["x_std"]) == (3.0, 1.0, 2.0, 1.0)
+    for s in ("max", "min", "mean", "med", "std"):
+        v = rows["b"][f"x_{s}"]
+        assert v is not None and math.isnan(v), (s, v)
+
+
 def test_approx_quantiles_rank_error(spark, transcripts):
     t = transcripts.withColumn(
         "wc", F.size(F.split("text", " ", -1)).cast("double")
